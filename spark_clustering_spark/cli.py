@@ -35,6 +35,13 @@ def _load_points(spark, path):
     )
 
 
+def _sorted_rows(metrics, *keys: str) -> list:
+    """The fit's metrics rows in sink order. The metrics frame is a few
+    driver-built rows, so it is collected and sorted here: a Spark
+    ``orderBy`` would run a sample job and a sort job for them."""
+    return sorted(metrics.collect(), key=lambda r: tuple(r[k] for k in keys))
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="spark_clustering_spark")
     ap.add_argument("algo", choices=["kmeans", "gka", "pso"])
@@ -62,7 +69,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, points, k=args.k, num_iter=args.num_iter,
             num_run=args.num_run, seed=args.seed,
         )
-        for r in res.metrics.orderBy("run", "iter").collect():
+        for r in _sorted_rows(res.metrics, "run", "iter"):
             lines.append(f"{r['iter']},{r['best_objectvalue']},{r['iter_ms']}")
     elif args.algo == "gka":
         pop, pm, cm = (list(args.extra) + [20, 0.6, 0.9])[:3]
@@ -72,7 +79,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, points, k=args.k, pop=int(pop), num_gen=args.num_iter,
             pm=pm, cm=cm, seed=args.seed,
         )
-        for r in res.metrics.orderBy("gen").collect():
+        for r in _sorted_rows(res.metrics, "gen"):
             lines.append(f"{r['gen']},{r['best_objectvalue']},{r['gen_ms']}")
     else:
         p, c1, c2, w_max, w_min = (list(args.extra) + [20, 2.0, 2.0, 0.9, 0.4])[:5]
@@ -83,7 +90,7 @@ def main(argv: list[str] | None = None) -> int:
             num_iter=args.num_iter, c1=c1, c2=c2, w_max=w_max, w_min=w_min,
             seed=args.seed, reference_compat=args.reference_compat,
         )
-        for r in res.metrics.orderBy("iter").collect():
+        for r in _sorted_rows(res.metrics, "iter"):
             lines.append(f"{r['iter']},{r['best_objectvalue']},{r['iter_ms']}")
 
     lines.append(f"{int((time.time() - t0) * 1000)}ms")

@@ -25,6 +25,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spark_clustering_spark.ml.kernels import fit_layout, gmm_soft_stats
+
 
 @dataclass
 class GMMResult:
@@ -60,13 +62,9 @@ def fit_gmm(
     """
     import numpy as np
 
-    from spark_clustering_spark.ml.kernels import gmm_soft_stats
-
     if k < 1 or num_iter < 1:
         raise ValueError("k and num_iter must be >= 1")
-    points = points.persist()
-    try:
-        n_pts = points.count()
+    with fit_layout(points) as (points, n_pts):
         init = points.orderBy("vec_id").limit(k).collect()
         means = [list(r.vec) for r in init]
         weights = [1.0 / k] * k
@@ -95,8 +93,6 @@ def fit_gmm(
                 rmass.append(rs)
             means = new_means
             weights = [m / n_pts for m in rmass]
-    finally:
-        points.unpersist()
 
     metrics = spark.createDataFrame(
         hist, "iteration int, loglik double, avg_loglik double"
@@ -123,13 +119,19 @@ def fit_gmm_mllib(
     from pyspark.ml.functions import array_to_vector
     from pyspark.sql import functions as F
 
-    feats = points.select(
-        "vec_id", array_to_vector(F.col("vec")).alias("features")
-    )
-    model = GaussianMixture(
-        k=k, maxIter=num_iter, seed=seed, featuresCol="features"
-    ).fit(feats)
-    pred = model.transform(feats).select(
+    def features(df: DataFrame) -> DataFrame:
+        return df.select("vec_id", array_to_vector(F.col("vec")).alias("features"))
+
+    # MLlib's seeded init samples per partition. Up to
+    # ROWS_PER_PARTITION rows the layout is one partition, so the model
+    # is a function of the rows and the seed alone; above that,
+    # coalesce keeps the caller's partition boundaries and the model
+    # still depends on them
+    with fit_layout(points) as (laid, _):
+        model = GaussianMixture(
+            k=k, maxIter=num_iter, seed=seed, featuresCol="features"
+        ).fit(features(laid))
+    pred = model.transform(features(points)).select(
         "vec_id",
         F.col("prediction").alias("cluster_id"),
         "probability",

@@ -14,7 +14,16 @@ path uses these Arrow-batched kernels instead, because:
   final combine. This is how a 100 TB Lloyd iteration must look: one
   narrow pass, constant-size shuffle.
 
-Determinism: identical data layout ⇒ identical float partial-sum order
+Layout: every fit (the MLlib ones in ml/kmeans.py and ml/gmm.py too)
+runs over ``fit_layout``'s cached copy of the input, whose partition
+count follows from the row count alone (``layout_partitions``: one
+partition per ``ROWS_PER_PARTITION`` rows, capped at the cluster's
+parallelism). At small n a kernel job's cost is
+Python-worker round-trips, so a tiny input runs as one fat task; a
+large input still saturates the cluster.
+
+Determinism: the layout is a function of n (and the cluster's
+parallelism), so the same input gives the same float partial-sum order
 ⇒ bitwise-reproducible runs (asserted in tests). Cross-layout runs
 agree to float tolerance — the hash-matched surface remains the
 expression path.
@@ -23,10 +32,67 @@ expression path.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import numpy as np
 
 from pyspark.sql import DataFrame
+
+# rows per kernel partition: small enough that one BLAS batch stays
+# cache-friendly, large enough that a tiny input is not split into
+# Python-worker round-trips (measured against the input's own layout
+# and against 5,000 at 5k-60k rows x 10-64 dims: PERF.md "Fit layout")
+ROWS_PER_PARTITION = 20_000
+
+
+def layout_partitions(n: int, parallelism: int) -> int:
+    """Kernel partition count for ``n`` rows:
+    clamp(ceil(n / ROWS_PER_PARTITION), 1, parallelism)."""
+    return max(1, min(parallelism, -(-n // ROWS_PER_PARTITION)))
+
+
+@contextmanager
+def fit_layout(
+    points: DataFrame, key: str | None = None
+) -> Iterator[tuple[DataFrame, int]]:
+    """Cache a fit's input once and yield ``(laid_out_points, n)``.
+
+    The input is persisted and counted at its incoming parallelism, so
+    the upstream scan and ingest stages keep their task count. The
+    cached copy is then narrowed to ``layout_partitions(n)``:
+
+    - ``key=None``: ``coalesce`` over the cache — no shuffle, no second
+      copy; it only merges partitions, never splits one;
+    - ``key="vec_id"`` (GKA): hash-repartitioned on the key and cached,
+      so a join on it shuffles only the other side; the pre-shuffle
+      cache is released as soon as the new one is materialized.
+
+    Only caches created here are released on exit: an input the caller
+    already persisted stays cached."""
+    owned: list[DataFrame] = []
+    if not points.storageLevel.useMemory and not points.storageLevel.useDisk:
+        points = points.persist()
+        owned.append(points)
+    try:
+        n = points.count()
+        parts = layout_partitions(
+            n, points.sparkSession.sparkContext.defaultParallelism
+        )
+        if key is None:
+            laid = points.coalesce(parts)
+        else:
+            laid = points.repartition(parts, key).persist()
+            owned.append(laid)
+            laid.count()
+            # the shuffled copy is materialized: free the source cache now
+            for df in owned[:-1]:
+                df.unpersist()
+            del owned[:-1]
+        yield laid, n
+    finally:
+        for df in owned:
+            df.unpersist()
+
 
 LLOYD_STATS_SCHEMA = (
     "cluster_id INT, n_points BIGINT, sum_dist DOUBLE, sum_sq DOUBLE, "

@@ -24,18 +24,21 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
-def get_spark(
-    app_name: str = "spark-clustering-engine",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for this engine."""
+# settings this engine's RESULTS depend on: applied to every session
+# get_spark returns, a running one included
+RESULT_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    # the driver-generated events table stores TIMESTAMP(NANOS) which
+    # vanilla Spark rejects; read as long and convert in io.table()
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def _engine_builder(app_name: str, master: str | None) -> SparkSession.Builder:
+    """Builder for a NEW session with this engine's defaults."""
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(default_parallelism(), 8)
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         # local mode = one JVM: the 1g default heap caps every cache and
@@ -58,18 +61,40 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(
+            "spark.sql.shuffle.partitions", str(max(default_parallelism(), 8))
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the driver-generated events table stores TIMESTAMP(NANOS) which
-        # vanilla Spark rejects; read as long and convert in io.table()
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
-    for k, v in (extra_conf or {}).items():
+
+
+def get_spark(
+    app_name: str = "spark-clustering-engine",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or reuse) a SparkSession tuned for this engine.
+
+    A new session gets the engine defaults (shuffle partitions: the
+    core count, at least 8). A running session keeps its performance
+    settings (shuffle partitions, AQE, Arrow, broadcast threshold), so a
+    library call such as ``cli.main`` never retunes the session it runs
+    in; only ``RESULT_CONF`` and the settings the caller passed
+    (``shuffle_partitions``, ``extra_conf``) are applied to it."""
+    if SparkSession.getActiveSession() is None:
+        builder = _engine_builder(app_name, master)
+    else:
+        builder = SparkSession.builder
+    conf = dict(RESULT_CONF)
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # codegen.cache.maxEntries is a STATIC conf: if a SparkSession

@@ -6,10 +6,11 @@ max token count. Divergence per SURVEY.md Q10: ragged (non-rectangular)
 input raises instead of silently null-padding.
 
 Spark-first: ``spark.read.csv`` with schema inference does the parse
-JVM-side; we validate rectangularity with one cheap aggregate and
-assemble ``features: array<double>`` + a stable ``id`` derived from
-file position. At 100 TB this scales as a normal partitioned text scan;
-the id assignment uses a deterministic sort key, never a driver loop.
+JVM-side; the rectangularity and numeric checks ride the id-minting
+job's per-slice aggregates, and we assemble ``features: array<double>``
++ a stable ``id`` derived from file position. At 100 TB this scales as
+a normal partitioned text scan; the id assignment uses a deterministic
+sort key, never a driver loop.
 """
 
 from __future__ import annotations
@@ -35,27 +36,33 @@ def read_numeric_csv(spark: SparkSession, path: str) -> DataFrame:
     any_null = null_flags[0]
     for flag in null_flags[1:]:
         any_null = any_null | flag
-    ragged = raw.where(any_null).limit(1).count()
-    if ragged:
-        raise ValueError(f"ragged CSV input (non-rectangular rows): {path}")
     feats = F.array(*[F.col(c).cast("double") for c in cols])
-    bad = raw.select(feats.alias("f")).where(
-        F.exists(F.col("f"), lambda x: x.isNull())
-    ).limit(1).count()
-    if bad:
-        raise ValueError(f"non-numeric token in CSV input: {path}")
+    bad = F.exists(feats, lambda x: x.isNull())
     # Deterministic 0-based id by (file, in-file position) order, minted
     # by global_running_agg's two-pass rank: range repartition on the
     # order key, per-slice counts, carry-in offsets — the R1 ingest
-    # front door never funnels the dataset through one reducer.
+    # front door never funnels the dataset through one reducer. Both
+    # validity checks ride its per-slice partials collect as max
+    # aggregates — no extra scan job; their per-row window columns are
+    # never selected, so the optimizer prunes them.
     from spark_clustering_spark.operators.windows import global_running_agg
 
     base = raw.withColumn("_file", F.input_file_name()).withColumn(
         "_pos", F.monotonically_increasing_id()
     )
-    ranked, _ = global_running_agg(
-        base, [F.col("_file"), F.col("_pos")], {"_rn": ("count", None)}
+    ranked, totals = global_running_agg(
+        base,
+        [F.col("_file"), F.col("_pos")],
+        {
+            "_rn": ("count", None),
+            "_ragged": ("max", any_null.cast("int")),
+            "_bad": ("max", bad.cast("int")),
+        },
     )
+    if totals["_ragged"]:
+        raise ValueError(f"ragged CSV input (non-rectangular rows): {path}")
+    if totals["_bad"]:
+        raise ValueError(f"non-numeric token in CSV input: {path}")
     return ranked.select(
         (F.col("_rn") - 1).cast("bigint").alias("id"), feats.alias("features")
     )

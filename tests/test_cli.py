@@ -150,3 +150,31 @@ def test_cli_reference_compat_flag(spark, tmp_path):
     ) == 0
     vb, total = _read_trace(out_b)
     assert len(vb) == 3 and total.endswith("ms")
+
+
+def test_cli_leaves_caller_session_conf_unchanged(spark, tmp_path):
+    """cli.main runs in the caller's session: it must not rewrite that
+    session's runtime conf (it used to reset spark.sql.shuffle.partitions
+    to the engine default, breaking later tests that relied on it)."""
+    before = dict(spark.conf.getAll)
+    out = str(tmp_path / "km.txt")
+    assert _run(["kmeans", FIXTURE, "2", "3", out, "1"]) == 0
+    assert dict(spark.conf.getAll) == before
+
+
+def test_get_spark_restores_result_conf_on_running_session(spark):
+    """The settings results depend on are applied to a running session
+    too; its performance settings are left alone."""
+    from spark_clustering_spark.session import RESULT_CONF, get_spark
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    try:
+        assert get_spark() is spark
+        for key, value in RESULT_CONF.items():
+            assert spark.conf.get(key) == value
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    finally:
+        for key, value in RESULT_CONF.items():
+            spark.conf.set(key, value)

@@ -53,3 +53,12 @@ def test_multi_file_ids_follow_file_then_position_order(spark, tmp_path):
     assert sorted(rows) == [0, 1, 2, 3, 4]
     assert rows[0] == [1.0, 10.0] and rows[2] == [3.0, 30.0]
     assert rows[3] == [4.0, 40.0] and rows[4] == [5.0, 50.0]
+
+
+def test_ragged_csv_message(spark, tmp_path):
+    """The ragged check (an empty cell; a short row already fails the
+    FAILFAST parse) rides the id-minting job and keeps its message."""
+    p = tmp_path / "short.csv"
+    p.write_text("1.0,2.0\n3.0,\n")
+    with pytest.raises(ValueError, match="ragged CSV input"):
+        read_numeric_csv(spark, str(p))
