@@ -16,6 +16,8 @@ mix the iteration number into the key) for independent substreams.
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,3 +44,9 @@ def sql_lcg_uniform(key_expr: str, seed: int = 42) -> str:
 def py_lcg_uniform(key: int, seed: int = 42) -> float:
     """Same stream, driver-side (for loop hyperparameters)."""
     return ((key * _A + _C + seed) % _M) / float(_M)
+
+
+def np_lcg_uniform(keys: np.ndarray, seed: int = 42) -> np.ndarray:
+    """Same stream over an int64 key array (inside a kernel)."""
+    k = np.asarray(keys, dtype=np.int64)
+    return ((k * _A + _C + seed) % _M) / float(_M)

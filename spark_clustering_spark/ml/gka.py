@@ -6,25 +6,38 @@ Q3): ``mutation_prob`` (Pm) and ``mutation_cm`` (Cm) follow gka.java:56-57.
 
 Scale inversion (SURVEY.md §4.3): the reference parallelizes over ≤20
 chromosomes with the dataset broadcast (gka.java:303,313); here the
-*data* stays partitioned and the population state is:
+*data* stays partitioned and the population is never materialized.
+``fit_layout`` caches the points once as contiguous ``vec_id`` range
+slices, each sorted by ``vec_id``. A member's labels are a function of
+its centers (argmin, ties to the lowest label) plus at most one
+mutated gene, so the per-generation state is tiny (≤ P·k·d centers and
+≤ P patches) and crosses the driver as broadcast literals.
 
-- ``labels``: a distributed DF (member_id, vec_id, label) — n·P rows,
-  the only structure proportional to data size;
-- per-member centers / objectives / mutated genes: tiny (≤ P·k·d),
-  crossing the driver each generation as collected literals (which also
-  truncates lineage; labels additionally localCheckpoint per gen).
+One generation = two narrow kernel jobs, no shuffle, no sort:
 
-One generation = KMO (two shuffles: center means keyed on
-(member,label,dim); reassignment argmin via broadcast of the P·k·d
-center table), mutation (window CDF per member + a ≤P-row driver
-patch), fitness (one P-row aggregate), driver-side roulette selection
-(Q8 — the wheel is P rows).
+1. ``gka_reassign`` (KMO): per (slice, member) the row count, the exact
+   8-dp distance sum (fitness, R13), the max and float sum of the
+   distances, and the (member, label) center partials.
+2. The driver sums the slices: objectives, each member's max distance
+   and total roulette weight, and each slice's carry-in — the weight of
+   every earlier slice (with w = Cm·max(d) − d, a prefix in ``vec_id``
+   order is Cm·max·count − Σd, the ``global_running_agg`` scheme).
+3. ``gka_mutation_picks`` (mutating members only, R12): each slice
+   recomputes those members' distances, scans its rows from the
+   carry-in and returns the first qualifying gene with its vector.
+4. The driver patches the objective and the center sums with the gene,
+   runs roulette selection (R10, Q8 — the wheel is P rows) and derives
+   the next centers from the remapped sums; nothing is re-aggregated.
+
+Gen-0 centers come from one ``gka_member_centers`` pass that draws the
+initial labels in the kernel. ``GKAResult.labels`` is a lazy kernel
+over the source that recomputes the final population on demand.
 
 Determinism (Q5): every draw is the shared integer LCG keyed by
 (member, generation, purpose). Q7 (GKA flavor): the mutated gene's
 objective contribution is measured against the *pre-mutation* centroid
 of its new label (gka.java:242-243). Q9: a label with zero members has
-no center row; reassignment only considers existing centers and the
+no center; reassignment only considers existing centers and the
 mutation patch keeps the old distance if the target center is missing
 — no 0/0 NaN can appear.
 """
@@ -38,14 +51,13 @@ from dataclasses import dataclass
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from spark_clustering_spark.functions.detagg import DEC
 from spark_clustering_spark.functions.rng import py_lcg_uniform
 from spark_clustering_spark.ml.kernels import (
     fit_layout,
     gka_member_centers,
+    gka_mutation_picks,
+    gka_population_labels,
     gka_reassign,
 )
 
@@ -61,126 +73,43 @@ class GKAResult:
     history: list[dict]
 
 
-def _init_labels(
-    spark: SparkSession, points: DataFrame, pop: int, k: int, seed: int
-) -> DataFrame:
-    """Random label vector per member (reference create_sol,
-    gka.java:380-386), seeded: label = floor(k · u(member·B + vec_id))."""
-    members = spark.range(pop).select(F.col("id").cast("int").alias("member_id"))
-    lab = points.select("vec_id").crossJoin(F.broadcast(members))
-    key = F.col("member_id").cast("bigint") * F.lit(1_000_003) + F.col("vec_id")
-    u = ((key * F.lit(1103515245) + F.lit(12345 + seed)) % F.lit(2**31)).cast(
-        "double"
-    ) / F.lit(float(2**31))
-    return lab.select(
-        "member_id", "vec_id", F.floor(u * k).cast("int").alias("label")
-    )
+def _combine_slices(
+    rows: list, cm: float
+) -> tuple[dict[int, float], dict[tuple[int, int], list], dict, dict]:
+    """Driver combine of ``gka_reassign``'s per-(slice, member) rows, in
+    slice order. Returns:
 
-
-def _gen_stats_and_picks(
-    assigned: DataFrame,
-    mutating: list[int],
-    u2: dict[int, float],
-    cm: float,
-    partials: DataFrame | None = None,
-) -> tuple[dict[int, float], list[dict], dict[tuple[int, int], list]]:
-    """ONE window pass over the assignment table returning both the
-    per-member objectives (R13, exact decimal window sum) and the
-    roulette-picked mutation gene per mutating member (R12: weight
-    w = Cm·max(d) − d, running cum normalized by the TOTAL — i.e. the
-    last running-cum value — and the pick is the FIRST row in vec_id
-    order whose interval [lo, hi) contains u2, mirroring the
-    reference's scan-and-break (gka.java:207-236)). With Cm < 1 the
-    weights of far points are negative, so the cum is non-monotone:
-    several intervals can contain u2 (first one wins) or none can (no
-    mutation for that member — the reference's index = -1 path). Only
-    ≤ 2P + a few rows are collected — fusing fitness into the pick job
-    saves a full aggregate job per generation.
-
-    When ``partials`` is given (the kind=1 center-partial rows the
-    reassign kernel emits), they ride the SAME collect as extra rows
-    and come back as ``{(member, label): [n, sum_vec ndarray]}`` —
-    P·k·num_partitions tiny rows, combined in collect order exactly
-    like ``_driver_combine``."""
-    w_all = Window.partitionBy("member_id")
-    w_ord = Window.partitionBy("member_id").orderBy("vec_id")
-    w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_full = w_ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    u2_col = (
-        F.create_map(*[x for m in mutating for x in (F.lit(int(m)), F.lit(u2[m]))])[
-            F.col("member_id")
-        ]
-        if mutating
-        else F.lit(None).cast("double")
-    )
-    ann = (
-        assigned.withColumn(
-            "obj", F.sum(F.col("dist").cast(DEC)).over(w_all).cast("double")
-        )
-        .withColumn("w", F.lit(cm) * F.max("dist").over(w_all) - F.col("dist"))
-        .withColumn("cum", F.sum("w").over(w_run))
-    )
-    # normalize by the total (last running cum) — NOT max(cum): with
-    # negative weights max ≠ total and the wheel's last value must be 1
-    ann = ann.withColumn("hi", F.col("cum") / F.last("cum").over(w_full))
-    ann = ann.withColumn(
-        "lo", F.coalesce(F.lag("hi").over(w_ord), F.lit(0.0))
-    )
-    is_first = F.row_number().over(w_ord) == 1
-    is_pick = (
-        u2_col.isNotNull() & (u2_col >= F.col("lo")) & (u2_col < F.col("hi"))
-    )
-    picked = (
-        ann.withColumn("is_first", is_first)
-        .withColumn("is_pick", is_pick)
-        .filter(F.col("is_first") | F.col("is_pick"))
-        .select(
-            "member_id", "vec_id", "label", "dist", "mdist", "obj",
-            "is_first", "is_pick",
-        )
-    )
-    if partials is not None:
-        picked = picked.unionByName(
-            partials.select(
-                "member_id",
-                F.lit(None).cast("bigint").alias("vec_id"),
-                "label",
-                F.lit(None).cast("double").alias("dist"),
-                F.lit(None).cast("double").alias("mdist"),
-                F.lit(None).cast("double").alias("obj"),
-                F.lit(False).alias("is_first"),
-                F.lit(False).alias("is_pick"),
-                "n_points",
-                "sum_vec",
-            ),
-            allowMissingColumns=True,
-        )
-    rows = picked.collect()
-    objs = {
-        int(r["member_id"]): float(r["obj"])
-        for r in rows
-        if r["is_first"]
-    }
+    - objectives {member: Σ round(dist, 8)}, exact before the one
+      division to float;
+    - center sums {(member, label): [n, Σvec]};
+    - roulette terms {member: (Cm·max d, total weight, {slice: carry})};
+    - slices {slice: (first vec_id, rows)}."""
+    units: dict[int, int] = {}
+    dmax: dict[int, float] = {}
     sums: dict[tuple[int, int], list] = {}
-    # scan-and-break: keep only the first qualifying gene per member
-    first_gene: dict[int, dict] = {}
+    slices: dict[int, tuple[int, int]] = {}
     for r in rows:
-        if partials is not None and r["n_points"] is not None:
-            key = (int(r["member_id"]), int(r["label"]))
-            e = sums.get(key)
+        m = int(r["member_id"])
+        slices[int(r["slice"])] = (int(r["first_id"]), int(r["n_rows"]))
+        units[m] = units.get(m, 0) + int(r["dist_units"])
+        dmax[m] = max(dmax.get(m, -math.inf), r["max_dist"])
+        for lab, n, s in zip(r["labels"], r["n_points"], r["sum_vec"]):
+            e = sums.get((m, int(lab)))
             if e is None:
-                sums[key] = [int(r["n_points"]), np.array(r["sum_vec"])]
+                sums[(m, int(lab))] = [int(n), np.array(s)]
             else:
-                e[0] += int(r["n_points"])
-                e[1] = e[1] + np.array(r["sum_vec"])
-            continue
-        if r["is_pick"]:
-            m = int(r["member_id"])
-            if m not in first_gene or r["vec_id"] < first_gene[m]["vec_id"]:
-                first_gene[m] = r.asDict()
-    genes = [first_gene[m] for m in sorted(first_gene)]
-    assert len(genes) == len(first_gene), "at most one gene per mutating member"
-    return objs, genes, sums
+                e[0] += int(n)
+                e[1] = e[1] + np.array(s)
+    wheels = {}
+    for m in dmax:
+        offset, acc, carries = cm * dmax[m], 0.0, {}
+        for r in rows:
+            if r["member_id"] == m:
+                carries[int(r["slice"])] = acc
+                acc += offset * r["n_rows"] - r["sum_dist"]
+        wheels[m] = (offset, acc, carries)
+    objs = {m: u / 10**8 for m, u in units.items()}
+    return objs, sums, wheels, slices
 
 
 def fit_gka(
@@ -200,114 +129,64 @@ def fit_gka(
     generation count, gka.java — a production fit wants tol): stop when
     a generation improves the running best objective by less than tol.
     tol=0 reproduces the fixed-generation history exactly."""
-    # hash-partition the data ONCE on the join key (fit_layout sizes the
-    # partition count from n): the cached layout advertises its
-    # partitioning, so the gen-0 labels⋈points centers join shuffles
-    # only the labels side (n·P skinny rows) — the data-sized side never
-    # re-shuffles across generations. The cache is released on exit;
-    # the returned labels DF stays valid — it recomputes from the source
-    # + broadcast centers if consumed after this point.
-    prev_mixed = None
-    with fit_layout(points, key="vec_id") as (points, _):
-        labels = _init_labels(spark, points, pop, k, seed)
-        best = float("inf")
-        best_member = -1
-        metrics_rows: list[tuple] = []
-        history: list[dict] = []
-
-        # gen-0 centers need one dedicated shuffle+kernel job (the initial
-        # labels exist only as a DF); every later generation's centers are
-        # derived DRIVER-SIDE from the partial sums the reassign kernel
-        # emits for free — see the sums bookkeeping at the loop tail
-        centers_map = gka_member_centers(labels, points)
+    best = float("inf")
+    best_member = -1
+    metrics_rows: list[tuple] = []
+    history: list[dict] = []
+    # (centers, patches, chosen) of the last selected population; the
+    # returned labels recompute from it (and the source) when consumed
+    last = None
+    with fit_layout(points, key="vec_id") as (laid, _):
+        centers_map = gka_member_centers(laid, pop, k, seed)
 
         for gen in range(num_gen):
             t0 = time.time()
-            # the mutation draws depend only on (member, gen, seed), so the
-            # target labels are known BEFORE reassignment — the kernel emits
-            # each point's distance to its member's target center (mdist)
-            # and the fit loop needs no separate gene-vector lookup job
             u1 = {m: py_lcg_uniform(m * 7919 + gen, seed + 1) for m in range(pop)}
             mutating = [m for m in range(pop) if u1[m] < pm]
             u2 = {m: py_lcg_uniform(m * 104729 + gen, seed + 2) for m in mutating}
             u3 = {m: py_lcg_uniform(m * 1299709 + gen, seed + 3) for m in mutating}
             targets = {m: int(u3[m] * k) for m in mutating}
-            # persist (lazy) instead of an eager checkpoint: the downstream
-            # jobs this generation reuse the materialization the first one
-            # triggers, without paying a dedicated write job
-            mixed = gka_reassign(
-                points, centers_map, targets, emit_partials=True
-            ).persist()
-            if prev_mixed is not None:
-                prev_mixed.unpersist()
-            prev_mixed = mixed
-            assigned = mixed.filter(F.col("kind") == 0).select(
-                "member_id", "vec_id", "label", "dist", "mdist"
-            )
-            partials = mixed.filter(F.col("kind") == 1).select(
-                "member_id", "label", "n_points", "sum_vec"
+
+            # ---- KMO + fitness: pass 1 ------------------------------------
+            objs, sums, wheels, slices = _combine_slices(
+                gka_reassign(laid, centers_map), cm
             )
 
-            # ---- fused fitness + pick + center partials: ONE job ---------
-            objs, genes, sums = _gen_stats_and_picks(
-                assigned, mutating, u2, cm, partials
-            )
+            # ---- mutation gene picks: pass 2 ------------------------------
+            genes = {}
+            if mutating:
+                genes = gka_mutation_picks(
+                    laid,
+                    {m: centers_map[m] for m in mutating},
+                    {m: (targets[m], u2[m], *wheels[m]) for m in mutating},
+                    slices,
+                )
 
-            # tiny lookup job for the ≤P mutated gene vectors (pruned scan
-            # of the cached points) — needed to patch the center sums
-            gene_vecs: dict[int, list] = {}
-            if genes:
-                vids = [int(g["vec_id"]) for g in genes]
-                gene_vecs = {
-                    int(r["vec_id"]): list(r["vec"])
-                    for r in points.filter(F.col("vec_id").isin(vids)).collect()
-                }
-
-            patches: list[tuple[int, int, int, float]] = []
-            for g in genes:
-                m = g["member_id"]
+            patches: dict[int, tuple[int, int]] = {}
+            for m, g in sorted(genes.items()):
                 new_label = targets[m]
                 md = g["mdist"]
                 # Q9 guard: NaN mdist = target label has no center → keep
                 # the old distance (reference keeps the old contribution)
                 new_dist = g["dist"] if md is None or math.isnan(md) else md
-                patches.append((int(m), int(g["vec_id"]), new_label, float(new_dist)))
+                patches[m] = (int(g["vec_id"]), new_label)
                 # patch the objective arithmetically (Q7: new distance is
                 # against the pre-mutation centroid) — no re-aggregation
                 objs[m] = objs[m] - g["dist"] + new_dist
                 # patch the center sums the same way: membership sums are
                 # linear, so moving one point is two O(d) updates
-                v = np.array(gene_vecs[int(g["vec_id"])], dtype=np.float64)
-                old_key = (int(m), int(g["label"]))
+                v = np.array(g["vec"], dtype=np.float64)
+                old_key = (m, int(g["label"]))
                 n_old, s_old = sums[old_key]
                 if n_old <= 1:
                     del sums[old_key]
                 else:
                     sums[old_key] = [n_old - 1, s_old - v]
-                new_key = (int(m), int(new_label))
-                e = sums.get(new_key)
+                e = sums.get((m, new_label))
                 if e is None:
-                    sums[new_key] = [1, v.copy()]
+                    sums[(m, new_label)] = [1, v.copy()]
                 else:
-                    sums[new_key] = [e[0] + 1, e[1] + v]
-            if patches:
-                pdf = spark.createDataFrame(
-                    patches, "p_m INT, p_v BIGINT, new_label INT, new_dist DOUBLE"
-                )
-                assigned = (
-                    assigned.join(
-                        F.broadcast(pdf),
-                        (F.col("member_id") == F.col("p_m"))
-                        & (F.col("vec_id") == F.col("p_v")),
-                        "left",
-                    )
-                    .select(
-                        "member_id",
-                        "vec_id",
-                        F.coalesce("new_label", "label").alias("label"),
-                        F.coalesce("new_dist", "dist").alias("dist"),
-                    )
-                )
+                    sums[(m, new_label)] = [e[0] + 1, e[1] + v]
 
             prev_best = best
             gen_best_m = min(objs, key=lambda m: (objs[m], m))
@@ -329,15 +208,7 @@ def fit_gka(
             for slot in range(pop):
                 u = py_lcg_uniform(slot * 15485863 + gen, seed + 4)
                 chosen.append(next((m for m, hi in cdf if u <= hi), cdf[-1][0]))
-            remap = spark.createDataFrame(
-                [(int(old), int(new)) for new, old in enumerate(chosen)],
-                "old_member INT, member_id INT",
-            )
-            labels = (
-                assigned.select(F.col("member_id").alias("old_member"), "vec_id", "label")
-                .join(F.broadcast(remap), "old_member")
-                .select("member_id", "vec_id", "label")
-            )
+            last = (centers_map, patches, chosen)
             # next generation's KMO centers, derived arithmetically: the
             # selection remap copies the chosen member's patched sums into
             # each slot (sums are linear in membership — no re-aggregation
@@ -350,13 +221,11 @@ def fit_gka(
                 }
                 for slot, old in enumerate(chosen)
             }
-    if prev_mixed is not None:
-        prev_mixed.unpersist()
     metrics = spark.createDataFrame(metrics_rows, GKA_METRICS_SCHEMA)
     return GKAResult(
         best_member=best_member,
         best_objective=best,
         metrics=metrics,
-        labels=labels,
+        labels=gka_population_labels(points, pop, k, seed, last),
         history=history,
     )

@@ -24,8 +24,11 @@ large input still saturates the cluster.
 
 Determinism: the layout is a function of n (and the cluster's
 parallelism), so the same input gives the same float partial-sum order
-⇒ bitwise-reproducible runs (asserted in tests). Cross-layout runs
-agree to float tolerance — the hash-matched surface remains the
+⇒ bitwise-reproducible runs (asserted in tests). One exception: GKA's
+range layout with more than one slice (n > ROWS_PER_PARTITION) takes
+its slice bounds from Spark's sampled range partitioner, which draws a
+new sample per fit, so runs agree to float tolerance only. Cross-layout
+runs agree to float tolerance — the hash-matched surface remains the
 expression path.
 """
 
@@ -37,6 +40,8 @@ from contextlib import contextmanager
 import numpy as np
 
 from pyspark.sql import DataFrame
+
+from spark_clustering_spark.functions.rng import np_lcg_uniform
 
 # rows per kernel partition: small enough that one BLAS batch stays
 # cache-friendly, large enough that a tiny input is not split into
@@ -63,9 +68,12 @@ def fit_layout(
 
     - ``key=None``: ``coalesce`` over the cache — no shuffle, no second
       copy; it only merges partitions, never splits one;
-    - ``key="vec_id"`` (GKA): hash-repartitioned on the key and cached,
-      so a join on it shuffles only the other side; the pre-shuffle
-      cache is released as soon as the new one is materialized.
+    - ``key="vec_id"`` (GKA): range-partitioned on the key, sorted
+      within each slice and cached, so partition i is the i-th
+      contiguous ``vec_id`` range and a kernel scans it in ``vec_id``
+      order — a prefix in ``vec_id`` order is then a per-slice carry-in
+      plus a local running sum. The pre-shuffle cache is released as
+      soon as the new one is materialized.
 
     Only caches created here are released on exit: an input the caller
     already persisted stays cached."""
@@ -81,7 +89,11 @@ def fit_layout(
         if key is None:
             laid = points.coalesce(parts)
         else:
-            laid = points.repartition(parts, key).persist()
+            laid = (
+                points.repartitionByRange(parts, key)
+                .sortWithinPartitions(key)
+                .persist()
+            )
             owned.append(laid)
             laid.count()
             # the shuffled copy is materialized: free the source cache now
@@ -315,14 +327,59 @@ GKA_CENTER_STATS_SCHEMA = (
 )
 
 
+def _init_labels(ids: np.ndarray, member: int, k: int, seed: int) -> np.ndarray:
+    """Gen-0 label of every point for ``member`` (reference create_sol,
+    gka.java:380-386), seeded: floor(k · u(member·1,000,003 + vec_id))."""
+    u = np_lcg_uniform(member * 1_000_003 + ids, seed)
+    return np.floor(u * k).astype(np.int32)
+
+
+def _prepare_centers(
+    centers_by_member: dict[int, dict[int, list]],
+) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """{member: {cid: center}} → {member: (sorted cids, (k_m, d) centers)}."""
+    return {
+        m: (
+            np.array(sorted(cs)),
+            np.array([cs[c] for c in sorted(cs)], dtype=np.float64),
+        )
+        for m, cs in centers_by_member.items()
+    }
+
+
+def _assign(V: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """KMO reassignment of a batch against one member's centers:
+    (distance matrix, argmin position — first min, so the lowest existing
+    label on ties —, distance to the assigned center)."""
+    D = _dist_matrix(V, C)
+    idx = D.argmin(axis=1)
+    return D, idx, D[np.arange(len(V)), idx]
+
+
+def _units_8dp(d: np.ndarray) -> int:
+    """Σ round(d, 8) as an exact integer count of 1e-8 units: each
+    distance is rounded to 8 dp (``np.round``'s rule) and the scaled
+    integers are summed as Python ints, so the objective cannot
+    overflow or drop a digit at any n. Below 2^53 units (distances
+    under ≈9e7) each value splits into 31-bit halves whose int64 sums
+    are exact for any batch size."""
+    q = np.rint(d * 1e8)
+    if not q.size:
+        return 0
+    if q.max() < 2.0**53:
+        qi = q.astype(np.int64)
+        return (int((qi >> 31).sum()) << 31) + int((qi & (2**31 - 1)).sum())
+    return sum(int(x) for x in q.tolist())
+
+
 def gka_member_centers(
-    labels: DataFrame, points: DataFrame
+    points: DataFrame, pop: int, k: int, seed: int
 ) -> dict[int, dict[int, list[float]]]:
-    """KMO center update for every member in one pass: join labels to
-    points (broadcast-friendly: the per-partition work is a segmented
-    sum), map-side partial (member,label) sums, final combine of
-    ≤ P·k·num_partitions tiny rows. Returns {member: {label: mean}}."""
-    j = labels.join(points, "vec_id").select("member_id", "label", "vec")
+    """Gen-0 KMO centers of every member in one narrow pass: the kernel
+    draws each member's initial labels itself (``_init_labels``, the
+    seeded LCG of (member, vec_id)) and emits per-(member, label)
+    partial sums; the driver combines ≤ P·k·num_partitions tiny rows.
+    Returns {member: {label: mean}}."""
 
     def kernel(batches) -> Iterator:
         import pandas as pd
@@ -331,21 +388,23 @@ def gka_member_centers(
             if not len(pdf):
                 continue
             V = np.array(list(pdf["vec"]), dtype=np.float64)
-            key = (
-                pdf["member_id"].to_numpy().astype(np.int64) * 100_000
-                + pdf["label"].to_numpy()
-            )
-            uniq, counts, sums = _segmented_sums(key, V)
-            yield pd.DataFrame(
-                {
-                    "member_id": (uniq // 100_000).astype(np.int32),
-                    "label": (uniq % 100_000).astype(np.int32),
-                    "n_points": counts,
-                    "sum_vec": [s.tolist() for s in sums],
-                }
-            )
+            ids = pdf["vec_id"].to_numpy()
+            frames = []
+            for m in range(pop):
+                uniq, counts, sums = _segmented_sums(_init_labels(ids, m, k, seed), V)
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "member_id": np.full(len(uniq), m, dtype=np.int32),
+                            "label": uniq,
+                            "n_points": counts,
+                            "sum_vec": [s.tolist() for s in sums],
+                        }
+                    )
+                )
+            yield pd.concat(frames, ignore_index=True)
 
-    partial = j.mapInPandas(kernel, GKA_CENTER_STATS_SCHEMA)
+    partial = points.mapInPandas(kernel, GKA_CENTER_STATS_SCHEMA)
     acc = _driver_combine(partial, ("member_id", "label"), ("n_points",), "sum_vec")
     out: dict[int, dict[int, list[float]]] = {}
     for (m, lab), (n, sv) in sorted(acc.items()):
@@ -356,121 +415,249 @@ def gka_member_centers(
 def _segmented_sums(
     keys: np.ndarray, V: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-key (count, vector-sum) segmented reduction — the shared
-    partial-stats kernel for the center-update passes. Returns
-    (unique_keys, counts int64, sums float64[len(unique), d])."""
-    uniq, inv = np.unique(keys, return_inverse=True)
-    sums = np.zeros((len(uniq), V.shape[1]))
-    np.add.at(sums, inv, V)
-    counts = np.bincount(inv, minlength=len(uniq)).astype(np.int64)
-    return uniq, counts, sums
+    """Per-key (count, vector-sum) segmented reduction over small
+    non-negative integer keys — the shared partial-stats kernel for the
+    center-update passes. One weighted ``bincount`` per dimension adds
+    the rows in row order, as ``np.add.at`` would, at a fraction of its
+    cost. Returns (present keys, counts int64, sums float64[len, d])."""
+    counts = np.bincount(keys)
+    uniq = np.flatnonzero(counts)
+    sums = np.empty((len(uniq), V.shape[1]))
+    for j in range(V.shape[1]):
+        sums[:, j] = np.bincount(keys, weights=V[:, j], minlength=len(counts))[uniq]
+    return uniq, counts[uniq].astype(np.int64), sums
 
 
-GKA_ASSIGN_SCHEMA = (
-    "member_id INT, vec_id BIGINT, label INT, dist DOUBLE, mdist DOUBLE"
+GKA_SLICE_SCHEMA = (
+    "slice INT, first_id BIGINT, n_rows BIGINT, member_id INT, "
+    "dist_units STRING, sum_dist DOUBLE, max_dist DOUBLE, labels ARRAY<INT>, "
+    "n_points ARRAY<BIGINT>, sum_vec ARRAY<ARRAY<DOUBLE>>"
 )
-
-# emit_partials=True adds per-partition center partials as kind=1 rows
-# (assignment rows are kind=0 with the extra columns NULL)
-GKA_ASSIGN_STATS_SCHEMA = (
-    GKA_ASSIGN_SCHEMA + ", kind TINYINT, n_points BIGINT, sum_vec ARRAY<DOUBLE>"
-)
+GKA_SLICE_COLUMNS = [f.split()[0] for f in GKA_SLICE_SCHEMA.split(", ")]
 
 
 def gka_reassign(
+    points: DataFrame, centers_by_member: dict[int, dict[int, list]]
+) -> list:
+    """Pass 1 of a GKA generation: KMO reassignment of every member in
+    one narrow pass over ``fit_layout``'s ``vec_id`` range slices. Per
+    slice, one distance matrix per member against its own centers; the
+    assignment itself is never materialized. Returns one row per
+    (slice, member), ordered by (slice, member), holding:
+
+    - ``first_id`` / ``n_rows``: the slice's first ``vec_id`` and row
+      count (``gka_mutation_picks`` checks its slices against them);
+    - ``dist_units``: Σ round(dist, 8) as an exact integer of 1e-8
+      units (a decimal string) — the objective, 8-dp exact;
+    - ``sum_dist`` / ``max_dist``: the float sum and the max of the
+      distances — the roulette wheel's per-slice terms;
+    - ``labels`` / ``n_points`` / ``sum_vec``: the (member, label)
+      center partials of the fresh assignment, which the fit loop
+      patches and remaps arithmetically into the next centers.
+
+    ``centers_by_member``: {member_id: {cid: center_list}}."""
+    bc = points.sparkSession.sparkContext.broadcast(_prepare_centers(centers_by_member))
+
+    def kernel(batches) -> Iterator:
+        import pandas as pd
+        from pyspark import TaskContext
+
+        prep = bc.value
+        first, n_rows = None, 0
+        # member → [units, Σd, max d, {label: [n, Σvec]}]
+        acc = {m: [0, 0.0, -np.inf, {}] for m in prep}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            if first is None:
+                first = int(pdf["vec_id"].iloc[0])
+            n_rows += len(pdf)
+            V = np.array(list(pdf["vec"]), dtype=np.float64)
+            for m, (cids, C) in prep.items():
+                _, idx, dist = _assign(V, C)
+                a = acc[m]
+                a[0] += _units_8dp(dist)
+                a[1] += float(dist.sum())
+                a[2] = max(a[2], float(dist.max()))
+                for pos, n, s in zip(*_segmented_sums(idx, V)):
+                    e = a[3].setdefault(int(cids[pos]), [0, 0.0])
+                    e[0] += int(n)
+                    e[1] = e[1] + s
+        if first is None:
+            return
+        sid = TaskContext.get().partitionId()
+        rows = []
+        for m in sorted(acc):
+            units, sum_dist, max_dist, parts = acc[m]
+            labs = sorted(parts)
+            rows.append((
+                sid, first, n_rows, m, str(units), sum_dist, max_dist, labs,
+                [parts[c][0] for c in labs], [parts[c][1].tolist() for c in labs],
+            ))
+        yield pd.DataFrame(rows, columns=GKA_SLICE_COLUMNS)
+
+    rows = points.mapInPandas(kernel, GKA_SLICE_SCHEMA).collect()
+    return sorted(rows, key=lambda r: (r["slice"], r["member_id"]))
+
+
+GKA_PICK_SCHEMA = (
+    "slice INT, member_id INT, vec_id BIGINT, label INT, dist DOUBLE, "
+    "mdist DOUBLE, vec ARRAY<DOUBLE>"
+)
+
+
+def gka_mutation_picks(
     points: DataFrame,
     centers_by_member: dict[int, dict[int, list]],
-    mutation_targets: dict[int, int] | None = None,
-    emit_partials: bool = False,
+    wheels: dict[int, tuple],
+    slices: dict[int, tuple[int, int]],
+) -> dict[int, dict]:
+    """Pass 2 of a GKA generation: the roulette gene pick (R12) of the
+    mutating members, one narrow pass over the same range slices as
+    ``gka_reassign``. The pick is the FIRST point in ``vec_id`` order
+    whose interval [lo, hi) of the normalized running weight contains
+    u2, with w = Cm·max(d) − d — the reference's scan-and-break
+    (gka.java:207-236). With Cm < 1 far points weigh negative, so the
+    running sum is non-monotone: several intervals can contain u2 (the
+    first wins) or none can (no mutation: the reference's index = -1).
+
+    ``wheels``: {member: (target label, u2, Cm·max d, total weight,
+    {slice: carry-in})}, the carry-in being the summed weight of every
+    earlier slice; each slice recomputes its members' distances and
+    scans its rows from that carry-in, so no window, sort or shuffle is
+    needed. ``slices``: {slice: (first vec_id, rows)} as pass 1 saw
+    them — a slice that differs (a recomputed range layout) raises
+    instead of mis-picking.
+
+    Returns {member: {vec_id, label, dist, mdist, vec}}: the gene, its
+    current label and distance, its distance to the target label's
+    center (``mdist``; NaN when the target label has no center — the
+    Q9 guard) and its vector."""
+    bc = points.sparkSession.sparkContext.broadcast(
+        (_prepare_centers(centers_by_member), wheels, slices)
+    )
+
+    def kernel(batches) -> Iterator:
+        import pandas as pd
+        from pyspark import TaskContext
+
+        prep, wh, sl = bc.value
+        sid = TaskContext.get().partitionId()
+        cum = {m: np.float64(w[4].get(sid, 0.0)) for m, w in wh.items()}
+        with np.errstate(divide="ignore", invalid="ignore"):
+            hi_prev = {m: cum[m] / wh[m][3] for m in wh}
+        first, n_rows, picks = None, 0, {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf["vec_id"].to_numpy()
+            if first is None:
+                first = int(ids[0])
+            n_rows += len(pdf)
+            live = [m for m in wh if m not in picks]
+            if not live:
+                continue
+            V = np.array(list(pdf["vec"]), dtype=np.float64)
+            for m in live:
+                cids, C = prep[m]
+                target, u2, offset, total, _ = wh[m]
+                D, idx, dist = _assign(V, C)
+                run = np.cumsum(np.concatenate(([cum[m]], offset - dist)))[1:]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    hi = run / total
+                lo = np.concatenate(([hi_prev[m]], hi[:-1]))
+                hit = np.flatnonzero((u2 >= lo) & (u2 < hi))
+                if len(hit):
+                    i = int(hit[0])
+                    tpos = int(np.searchsorted(cids, target))
+                    has_target = tpos < len(cids) and cids[tpos] == target
+                    picks[m] = (
+                        int(ids[i]),
+                        int(cids[idx[i]]),
+                        float(dist[i]),
+                        float(D[i, tpos]) if has_target else np.nan,
+                        V[i].tolist(),
+                    )
+                cum[m], hi_prev[m] = run[-1], hi[-1]
+        if (first, n_rows) != sl.get(sid, (None, 0)):
+            raise RuntimeError(
+                f"GKA slice {sid} holds {n_rows} rows from vec_id {first}, "
+                f"pass 1 saw {sl.get(sid)}: the range layout changed"
+            )
+        if picks:
+            members = sorted(picks)
+            cols = list(zip(*(picks[m] for m in members)))
+            yield pd.DataFrame(
+                {
+                    "slice": np.int32(sid),
+                    "member_id": np.array(members, dtype=np.int32),
+                    "vec_id": np.array(cols[0], dtype=np.int64),
+                    "label": np.array(cols[1], dtype=np.int32),
+                    "dist": cols[2],
+                    "mdist": cols[3],
+                    "vec": list(cols[4]),
+                }
+            )
+
+    genes: dict[int, dict] = {}
+    for r in sorted(
+        points.mapInPandas(kernel, GKA_PICK_SCHEMA).collect(),
+        key=lambda r: r["slice"],
+    ):
+        genes.setdefault(int(r["member_id"]), r.asDict())
+    return genes
+
+
+GKA_LABELS_SCHEMA = "member_id INT, vec_id BIGINT, label INT"
+
+
+def gka_population_labels(
+    points: DataFrame, pop: int, k: int, seed: int, last: tuple | None = None
 ) -> DataFrame:
-    """KMO reassignment for every member in one narrow pass: per
-    partition, one distance matrix per member against its own centers.
-    ``centers_by_member``: {member_id: {cid: center_list}}. Returns the
-    (member, vec) assignment table (n·P rows — inherent to GKA).
-
-    ``mutation_targets`` ({member: label}, drawable before this job
-    because the mutation-target draw depends only on (member, gen,
-    seed)): for those members, ``mdist`` carries each point's distance
-    to the target label's center — a free column copy out of the
-    already-computed distance matrix that saves the fit loop a separate
-    gene-vector lookup job per generation. ``mdist`` is NaN when the
-    member has no target or the target label has no center (the Q9
-    missing-center guard: caller keeps the old distance).
-
-    ``emit_partials`` additionally emits, per partition, one kind=1 row
-    per (member, new-label) holding the partial point count + vector
-    sum of the fresh assignment — the same segmented sums
-    ``gka_member_centers`` computes, but for free out of the V already
-    in hand. The fit loop collects these with the fitness pass, applies
-    the mutation patch and the selection remap to the sums
-    ARITHMETICALLY on the driver (they are linear in membership), and
-    derives the next generation's centers without a dedicated
-    shuffle+kernel job."""
-    prepared = {
-        m: (np.array(sorted(cs)), np.array([cs[c] for c in sorted(cs)], dtype=np.float64))
-        for m, cs in centers_by_member.items()
-    }
-    targets = dict(mutation_targets or {})
-    bc = points.sparkSession.sparkContext.broadcast((prepared, targets))
+    """The (member_id, vec_id, label) table of a GKA population, LAZY:
+    a narrow kernel over ``points`` recomputes it whenever it is
+    consumed, so nothing n·P-sized is cached. ``last`` is None for the
+    gen-0 population (``_init_labels``); otherwise it is the last
+    selected generation's ``(centers_by_member, patches, chosen)``:
+    slot s holds member chosen[s]'s KMO labels (argmin against that
+    member's centers) with its mutation patch {member: (vec_id, label)}
+    applied."""
+    if last is not None:
+        centers, patches, chosen = last
+        last = (_prepare_centers(centers), patches, chosen)
+    bc = points.sparkSession.sparkContext.broadcast(last)
 
     def kernel(batches) -> Iterator:
         import pandas as pd
 
-        prep, targ = bc.value
+        state = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(list(pdf["vec"]), dtype=np.float64)
             ids = pdf["vec_id"].to_numpy()
-            frames = []
-            for m, (cids, C) in prep.items():
-                D = _dist_matrix(V, C)
-                idx = D.argmin(axis=1)
-                t = targ.get(m)
-                tpos = int(np.searchsorted(cids, t)) if t is not None else -1
-                if t is not None and tpos < len(cids) and cids[tpos] == t:
-                    mdist = D[:, tpos]
-                else:
-                    mdist = np.full(len(V), np.nan)
-                labels = cids[idx].astype(np.int32)
-                frame = pd.DataFrame(
-                    {
-                        "member_id": np.full(len(V), m, dtype=np.int32),
-                        "vec_id": ids,
-                        "label": labels,
-                        "dist": D[np.arange(len(V)), idx],
-                        "mdist": mdist,
-                    }
-                )
-                if emit_partials:
-                    frame["kind"] = np.int8(0)
-                    frame["n_points"] = pd.array(
-                        [None] * len(V), dtype="Int64"
-                    )
-                    frame["sum_vec"] = None
-                    uniq, counts, sums = _segmented_sums(
-                        labels.astype(np.int64), V
-                    )
-                    part = pd.DataFrame(
-                        {
-                            "member_id": np.full(len(uniq), m, dtype=np.int32),
-                            "vec_id": pd.array([None] * len(uniq), dtype="Int64"),
-                            "label": uniq.astype(np.int32),
-                            "dist": np.nan,
-                            "mdist": np.nan,
-                            "kind": np.int8(1),
-                            "n_points": counts,
-                            "sum_vec": [s.tolist() for s in sums],
-                        }
-                    )
-                    frames.append(frame)
-                    frames.append(part)
-                else:
-                    frames.append(frame)
-            yield pd.concat(frames, ignore_index=True)
+            if state is None:
+                labels = {m: _init_labels(ids, m, k, seed) for m in range(pop)}
+                slots = list(range(pop))
+            else:
+                prep, patches, slots = state
+                V = np.array(list(pdf["vec"]), dtype=np.float64)
+                labels = {}
+                for m in set(slots):
+                    cids, C = prep[m]
+                    lab = cids[_assign(V, C)[1]].astype(np.int32)
+                    if m in patches:
+                        vid, new_label = patches[m]
+                        lab[ids == vid] = new_label
+                    labels[m] = lab
+            yield pd.DataFrame(
+                {
+                    "member_id": np.repeat(np.arange(pop, dtype=np.int32), len(ids)),
+                    "vec_id": np.tile(ids, pop),
+                    "label": np.concatenate([labels[m] for m in slots]),
+                }
+            )
 
-    schema = GKA_ASSIGN_STATS_SCHEMA if emit_partials else GKA_ASSIGN_SCHEMA
-    return points.mapInPandas(kernel, schema)
+    return points.mapInPandas(kernel, GKA_LABELS_SCHEMA)
 
 
 GMM_STATS_SCHEMA = (

@@ -16,6 +16,8 @@ on ``local[*]``:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -119,3 +121,20 @@ def get_spark(
             stacklevel=2,
         )
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set a session conf for the block, then give the caller's session
+    back as it was: the previous value restored, or the key unset if
+    the caller had not set it (``conf.get`` without a default would
+    read the built-in default and pin it)."""
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_clustering_spark.io import table
+from spark_clustering_spark.session import scoped_conf
 
 EVENT_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
@@ -67,9 +68,19 @@ def write_replay_chunks(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     jobs = list(enumerate(range(0, n, chunk)))
+    # each chunk write runs with its own copy of the caller's local
+    # properties (job group, description) and job tags, so its jobs are
+    # attributed to the caller; one copy shared by the pool threads would
+    # let concurrent writes overwrite each other's SQL execution id
     with ThreadPoolExecutor(max_workers=min(len(jobs), 8)) as pool:
-        dirs = list(pool.map(_write_one, jobs))
+        futures = [
+            pool.submit(inheritable_thread_target(df.sparkSession)(_write_one), job)
+            for job in jobs
+        ]
+        dirs = [f.result() for f in futures]
     base = time.time()
     for ci, cdir in enumerate(dirs):
         for root, _, files in os.walk(cdir):
@@ -391,9 +402,7 @@ def stream_upsert(
     # per shard, and the merge's cost driver at this scale is shard
     # overhead, not rows. On a real deployment this rises with key
     # cardinality and input rate — never left at the batch default.
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
         q = (
             _read_stream(spark, replay)
             .writeStream.foreachBatch(handle)
@@ -402,8 +411,6 @@ def stream_upsert(
             .start()
         )
         _drain(q)  # guarded: never rmtree under a live FileStreamSource
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
     # the CURRENT state dir must survive (the returned df reads it
     # lazily); the drained query's checkpoint and the stale alternate
     # state dir are dead weight (ADVICE r5 tempdir hygiene)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from spark_clustering_spark.registry import query
+from spark_clustering_spark.session import scoped_conf
 
 STATE_SCHEMA = "n_events BIGINT, sum_cents BIGINT, last_ts_epoch BIGINT"
 OUTPUT_SCHEMA = (
@@ -76,15 +77,11 @@ def run_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task + state-commit overhead — the cost driver here is batches ×
     # shards, not rows. At 100 TB you'd raise both with key cardinality
     # and input rate, not leave them at the batch defaults.
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
         replay = replay_dir(spark, sf_dir, n_chunks=2)
         src = _read_stream(spark, replay)
         out = user_engagement_stream(src.select("user_id", "ts", "value"))
         res = _run_to_completion(out, "update", f"engage_{id(src)}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
     # update mode emits one row per user per batch: keep the final state
     from pyspark.sql.window import Window
 

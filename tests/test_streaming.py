@@ -401,3 +401,50 @@ def test_drain_timeout_stops_query_before_source_cleanup(spark):
         if q.isActive:
             q.stop()
         shutil.rmtree(replay, ignore_errors=True)
+
+
+def test_stream_upsert_leaves_session_shuffle_conf_as_found(spark):
+    """q_stream_upsert scopes its shuffle width to the query: a key the
+    caller never set stays unset (not pinned to the built-in default),
+    and a set key gets its value back."""
+    from spark_clustering_spark.streaming.windows import q_stream_upsert
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        q_stream_upsert(spark, SF_SMALL)
+        assert spark.conf.get(key, None) is None
+        spark.conf.set(key, "7")
+        q_stream_upsert(spark, SF_SMALL)
+        assert spark.conf.get(key, None) == "7"
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+def test_replay_chunk_writes_carry_the_callers_job_group(spark, tmp_path):
+    """The concurrent chunk-write jobs inherit the caller's job group, so
+    a traced run can attribute them."""
+    import uuid
+
+    from spark_clustering_spark.streaming.harness import write_replay_chunks
+
+    sc = spark.sparkContext
+    group = f"replay-{uuid.uuid4().hex}"
+    df = spark.range(40).withColumnRenamed("id", "event_id").persist()
+    # job ids grow monotonically: an ungrouped id above this one is new
+    last_ungrouped = max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+    sc.setJobGroup(group, "replay chunks")
+    try:
+        write_replay_chunks(df, "event_id", str(tmp_path), 4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        df.unpersist()
+    # the max-id probe plus at least one write job per chunk, none outside
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 5
+    assert max(sc.statusTracker().getJobIdsForGroup(None), default=-1) == last_ungrouped
+    assert len(list(tmp_path.glob("chunk_*"))) == 4
